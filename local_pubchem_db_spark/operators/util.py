@@ -523,6 +523,52 @@ def _already_cached(df: DataFrame) -> bool:
         return False
 
 
+# Schema memo for read_parquet(): (path, directory mtime) -> StructType.
+# Process-wide and NOT in _SESSION_MEMOS: a schema is file metadata, not
+# warm-path state, so release_shared_caches() must not force every later
+# read to pay inference again.
+_SCHEMA_MEMO: dict[tuple[str, float], "object"] = {}
+
+
+def read_parquet(spark, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers each table state's schema once.
+
+    Spark 4 runs a 1-task footer-inference job for every schema-less
+    ``read.parquet`` call, so every read paid one fixed driver round trip
+    before its real job. The memo holds schema METADATA only (never rows,
+    never a DataFrame or file index): the first read of each path in a
+    process still pays the footer job, and the supplied schema makes
+    later reads plan-only while the file listing stays fresh on every
+    call. Results are unchanged — the memoized schema IS the file schema
+    Spark would re-infer.
+
+    Staleness guard: the memo key carries the path's directory mtime, so
+    a table rewritten at the same path in one process (new, removed or
+    rewritten part files bump the directory mtime) is re-inferred instead
+    of silently read with the stale schema (Spark nulls columns missing
+    from files). An in-place byte edit of an existing part file without a
+    directory change is not caught — that cannot change the schema without
+    changing the file set for any writer Spark or this repo uses. The stat
+    is a local filesystem call, no job. Inserting a new table state drops
+    the path's older states, so the memo holds one schema per path.
+    """
+    import os
+
+    try:
+        key = (path, os.path.getmtime(path))
+    except OSError:
+        # missing path: let the Spark read raise its own error
+        return spark.read.parquet(path)
+    sch = _SCHEMA_MEMO.get(key)
+    if sch is None:
+        df = spark.read.parquet(path)
+        for old in [k for k in list(_SCHEMA_MEMO) if k[0] == path]:
+            _SCHEMA_MEMO.pop(old, None)
+        _SCHEMA_MEMO[key] = df.schema
+        return df
+    return spark.read.schema(sch).parquet(path)
+
+
 def release_shared_caches(spark) -> None:
     """Drop every cached relation in the session — the release half of
     ``shared()``'s contract for long-lived sessions. Storage-only: does

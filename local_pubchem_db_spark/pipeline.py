@@ -36,6 +36,12 @@ Scale design notes:
   (utils.py:322-332) without a transactional store.
   ``local_pubchem_db_spark.streaming.ingest`` adds checkpointed file
   tracking on the same sink contract.
+- Serving: every table read goes through ``operators.util.read_parquet``,
+  which memoizes the parquet schema per (path, directory mtime). After the
+  first read of a table state, a ``PubChemDB`` lookup is plan-only: one
+  Spark job (its collect), no schema-inference job. Only the schema is
+  memoized, never a DataFrame, so the file listing is fresh on every call,
+  and a rebuild changes the directory mtime, so it is re-inferred.
 """
 
 from __future__ import annotations
@@ -50,12 +56,14 @@ from typing import Any, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from local_pubchem_db_spark.operators.util import driver_rows_df, read_parquet
 from local_pubchem_db_spark.plans.layout import (
     CompiledLayout,
     compile_layout,
     select_exprs,
 )
 from local_pubchem_db_spark.sources.manifest import (
+    MANIFEST_SCHEMA,
     manifest_rows_for,
     pending_files,
     read_manifest,
@@ -83,6 +91,13 @@ class PubChemDB:
     Directory layout: ``<base>/db/compounds`` (parquet),
     ``<base>/db/sdf_file`` (parquet manifest), ``<base>/db/idx_<col>``
     (sorted covering projections for WITH_INDEX columns).
+
+    Lookups are plan-only after the first read of a table state: the
+    tables are read through ``read_parquet``, whose memo supplies the
+    schema, so each lookup runs one Spark job and ``register_views`` none.
+    The memo holds the schema and not the DataFrame, so every call lists
+    the files again and sees rows appended by a later build, and a
+    rebuild (new directory mtime) re-infers the schema.
     """
 
     def __init__(self, spark: SparkSession, base_dir: str):
@@ -93,7 +108,7 @@ class PubChemDB:
 
     # -- tables ---------------------------------------------------------
     def compounds(self) -> DataFrame:
-        df = self.spark.read.parquet(self.compounds_path)
+        df = read_parquet(self.spark, self.compounds_path)
         # Streaming builds partition by ingest_batch for idempotent batch
         # replay (streaming/ingest.py); it is sink bookkeeping, not data.
         return df.drop("ingest_batch") if "ingest_batch" in df.columns else df
@@ -190,17 +205,22 @@ def build_db(
                     .partitionBy("ingest_batch")
                     .parquet(db.compounds_path)
                 )
-                manifest = manifest_rows_for(
-                    rows.select("source_file"), sdf_files
+                # The manifest rows are computed once (one row per file, a
+                # tiny collect) and the same rows are written and logged,
+                # so current_date() is evaluated once per build.
+                logged = (
+                    manifest_rows_for(rows.select("source_file"), sdf_files)
+                    .orderBy("filename")
+                    .collect()
                 )
-                manifest.write.mode("append").parquet(db.manifest_path)
+                driver_rows_df(spark, logged, MANIFEST_SCHEMA).write.mode(
+                    "append"
+                ).parquet(db.manifest_path)
                 # A17 parity (utils.py:319,324,134,162-163): per-file
                 # progress + row counts, then the batch wall time. Files
                 # ingest concurrently in ONE job here (the reference loops
                 # them serially), so the wall time is per batch, not per
-                # file — the per-file rows come from the manifest already
-                # computed for this batch (one row per file, tiny collect).
-                logged = manifest.orderBy("filename").collect()
+                # file.
                 for ii, r in enumerate(logged):
                     print(
                         "Processed sdf-file: %s (%d/%d): %d compounds"

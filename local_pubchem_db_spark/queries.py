@@ -58,8 +58,10 @@ from local_pubchem_db_spark.operators.similarity import (
     ivf_within_partition_pairs,
 )
 from local_pubchem_db_spark.operators.topk import distributed_ntile, top_k_per_group
-from local_pubchem_db_spark.operators.util import (
+from local_pubchem_db_spark.operators.util import (  # noqa: F401 - _SCHEMA_MEMO re-exported
+    _SCHEMA_MEMO,
     broadcast_if_small,
+    read_parquet,
     sized_shuffle_partitions,
 )
 
@@ -69,43 +71,8 @@ TABLES = [
 ]
 
 
-# Schema memo for t(): Spark 4 runs a 1-task footer job per
-# schema-less read.parquet call, so every query construction paid one
-# fixed driver round trip PER TABLE READ (~0.1 s each on local[32],
-# worse at the driver's low-core scaling bench — measured r15: 3-4
-# construction jobs on the star-join rows were exactly their reads).
-# The memo holds schema METADATA only (never rows): the first read of
-# each path in a process still pays the footer job, and a supplied
-# schema makes subsequent reads plan-only. Results are unchanged — the
-# memoized schema IS the file schema Spark would re-infer.
-#
-# Staleness guard (r16, VERDICT r15 What's-wrong #4 / ADVICE): the memo
-# key carries the path's directory mtime, so a fixture REGENERATED at
-# the same path in one process (new/removed/rewritten part files bump
-# the directory mtime) re-infers instead of silently reading with the
-# stale schema (Spark nulls columns missing from files). An in-place
-# byte edit of an existing part file without a directory change is not
-# caught — that cannot change the schema without changing the file set
-# for any writer Spark or this repo uses. The stat is a local
-# filesystem call, no job.
-_SCHEMA_MEMO: dict[tuple[str, float], "object"] = {}
-
-
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    import os as _os
-
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        key = (path, _os.path.getmtime(path))
-    except OSError:
-        # missing path: let the Spark read raise its own error
-        return spark.read.parquet(path)
-    sch = _SCHEMA_MEMO.get(key)
-    if sch is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_MEMO[key] = df.schema
-        return df
-    return spark.read.schema(sch).parquet(path)
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _parquet_ts_is_nanos(path: str, col: str = "ts") -> bool:

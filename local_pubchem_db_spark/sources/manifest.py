@@ -28,7 +28,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from local_pubchem_db_spark.operators.util import driver_rows_df
+from local_pubchem_db_spark.operators.util import driver_rows_df, read_parquet
 
 MANIFEST_SCHEMA = StructType(
     [
@@ -46,7 +46,7 @@ def read_manifest(spark: SparkSession, manifest_path: str) -> DataFrame:
     builds add an ingest_batch partition column (idempotent batch replay,
     streaming/ingest.py) — sink bookkeeping, dropped here."""
     if _exists(manifest_path):
-        df = spark.read.parquet(manifest_path)
+        df = read_parquet(spark, manifest_path)
         if "ingest_batch" in df.columns:
             df = df.drop("ingest_batch")
         return df.select(*[f.name for f in MANIFEST_SCHEMA.fields])

@@ -196,3 +196,114 @@ def test_crash_between_data_and_manifest_does_not_duplicate(
         build_db(base, use_gzip=True, reset=False, db_specs=specs(), spark=spark) == 0
     )
     assert db.compounds().count() == 8
+
+
+def lookup_specs(with_formula=True, xlogp3_not_null=False):
+    """Columns for all five PubChemDB lookups; no indexes (keeps it quick)."""
+    s = specs(xlogp3_not_null=xlogp3_not_null)
+    cols = s["columns"]
+    cols["InChIKey_1"] = {
+        "SD_TAG": ["PUBCHEM_IUPAC_INCHIKEY"],
+        "CREATE_LIKE": "lambda __x: __x.split('-')[0]",
+        "DTYPE": "varchar",
+    }
+    cols["exact_mass"] = {"SD_TAG": ["PUBCHEM_EXACT_MASS"], "DTYPE": "real"}
+    if with_formula:
+        cols["molecular_formula"] = {
+            "SD_TAG": ["PUBCHEM_MOLECULAR_FORMULA"],
+            "DTYPE": "varchar",
+        }
+    return s
+
+
+def _jobs_run_by(spark, fn):
+    """(Spark jobs ``fn`` runs, its result). Jobs are counted with the
+    status tracker under a job group of their own: a group left set on
+    this thread by an earlier test would hide them from a count over the
+    ungrouped jobs."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-run-by-{uuid.uuid4().hex}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), result
+
+
+def test_lookups_are_plan_only_after_first_read(spark, sdf_dir, tmp_path):
+    # After one read of a table state, the memoized schema makes every
+    # lookup a single job (its collect) with no schema-inference job, and
+    # register_views() runs no job at all.
+    base = make_base(tmp_path, sdf_dir)
+    assert (
+        build_db(base, use_gzip=True, reset=True, db_specs=lookup_specs(), spark=spark)
+        == 0
+    )
+    db = PubChemDB(spark, base)
+    row = db.compounds().filter("cid = 31038").collect()[0]
+    db.sdf_file().count()
+
+    lookups = {
+        "by_cid": lambda: db.by_cid(31038),
+        "by_inchikey": lambda: db.by_inchikey(row["inchikey"]),
+        "by_inchikey_prefix": lambda: db.by_inchikey_prefix(row["InChIKey_1"]),
+        "mass_window": lambda: db.mass_window(row["exact_mass"]),
+        "by_formula": lambda: db.by_formula(row["molecular_formula"]),
+    }
+    for name, lookup in lookups.items():
+        n, rows = _jobs_run_by(spark, lambda: lookup().select("cid").collect())
+        assert n == 1, f"{name} must run exactly one job"
+        assert 31038 in {r["cid"] for r in rows}, name
+
+    n, _ = _jobs_run_by(spark, db.register_views)
+    assert n == 0, "register_views must not run a job"
+
+
+def test_rebuild_under_live_db_reinfers_schema(spark, sdf_dir, tmp_path):
+    # A reset rebuild with a layout that drops a column (and tightens
+    # NOT-NULL) under the same PubChemDB: the memoized schema of the old
+    # table state must not be served for the new one.
+    base = make_base(tmp_path, sdf_dir)
+    assert (
+        build_db(base, use_gzip=True, reset=True, db_specs=lookup_specs(), spark=spark)
+        == 0
+    )
+    db = PubChemDB(spark, base)
+    assert "molecular_formula" in db.compounds().columns
+    assert db.by_cid(34516).count() == 1
+
+    new_specs = lookup_specs(with_formula=False, xlogp3_not_null=True)
+    assert (
+        build_db(base, use_gzip=True, reset=True, db_specs=new_specs, spark=spark)
+        == 0
+    )
+    assert sorted(db.compounds().columns) == sorted(new_specs["columns"])
+    assert db.by_cid(34516).count() == 0  # NOT-NULL xlogp3 drops it now
+    got = [r.asDict() for r in db.by_cid(31038).collect()]
+    assert len(got) == 1
+    assert set(got[0]) == set(new_specs["columns"])
+    assert got[0]["xlogp3"] == 6.6
+
+
+def test_schema_memo_holds_one_entry_per_path(spark, sdf_dir, tmp_path):
+    # Each rebuild is a new table state (new directory mtime); inserting
+    # its schema drops the path's older states.
+    from local_pubchem_db_spark.operators.util import _SCHEMA_MEMO
+
+    base = make_base(tmp_path, sdf_dir)
+    db = PubChemDB(spark, base)
+    seen = set()
+    for _ in range(3):
+        assert (
+            build_db(base, use_gzip=True, reset=True, db_specs=specs(), spark=spark)
+            == 0
+        )
+        assert db.compounds().count() == 8
+        seen.add(os.path.getmtime(db.compounds_path))
+    assert len(seen) == 3, "each rebuild must be a distinct table state"
+    keys = [k for k in _SCHEMA_MEMO if k[0] == db.compounds_path]
+    assert keys == [(db.compounds_path, os.path.getmtime(db.compounds_path))]
